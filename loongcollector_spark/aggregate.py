@@ -33,23 +33,6 @@ def with_pack_id(df: DataFrame, group_key: str = "conv_id",
     )
 
 
-def windowed_counts(
-    df: DataFrame,
-    window_duration: str = "1 hour",
-    keys: tuple[str, ...] = ("role",),
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Tumbling-window counters per key combo. Output columns:
-    window_start, <keys...>, n_rows."""
-    return (
-        df.groupBy(
-            F.window(F.col(ts_col), window_duration).getField("start").alias("window_start"),
-            *[F.col(k) for k in keys],
-        )
-        .agg(F.count("*").alias("n_rows"))
-    )
-
-
 def melt_sink_counters(
     routed: DataFrame,
     rules,
@@ -60,8 +43,8 @@ def melt_sink_counters(
     """Single-pass counters across ALL sinks: melt the per-sink boolean
     bits into an exploded sink-name column, then one partial-aggregated
     groupBy — one scan of the routed frame instead of one filtered scan
-    per sink. Output identical to sink_counters over the sink branches:
-    (sink, window_start, keys..., n_rows)."""
+    per sink. Output: (sink, window_start, keys..., n_rows) — the rows
+    of each sink counted per tumbling event-time window and key combo."""
     from loongcollector_spark.routing import SINK_PREFIX
 
     sink_names = F.filter(
@@ -80,26 +63,3 @@ def melt_sink_counters(
         .agg(F.count("*").alias("n_rows"))
         .select("sink", "window_start", *keys, "n_rows")
     )
-
-
-def sink_counters(
-    sinks: dict[str, DataFrame],
-    window_duration: str = "1 hour",
-    keys: tuple[str, ...] = ("role",),
-) -> DataFrame:
-    """One counters frame across all sinks: (sink, window_start, keys..., n_rows).
-    Each sink's counts come from its (cached) branch frame — no re-scan."""
-    if not sinks:
-        raise ValueError(
-            "sink_counters needs at least one sink frame (no routing rule "
-            "matched / empty sink dict)"
-        )
-    parts = []
-    for name, sdf in sinks.items():
-        parts.append(
-            windowed_counts(sdf, window_duration, keys).withColumn("sink", F.lit(name))
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("sink", "window_start", *keys, "n_rows")

@@ -44,10 +44,12 @@ def _hadoop_read_text(spark, path: str) -> str | None:
     return bytes(data).decode("utf-8")
 
 
-def _hadoop_write_text(spark, path: str, text: str) -> None:
-    """Atomic-enough write for any Hadoop FS: tmp + rename (rename is
-    atomic on HDFS/local; on S3 it's copy+delete — still safe here
-    because a torn manifest only forces a full re-run)."""
+def write_text(spark, path: str, text: str) -> None:
+    """The one writer for small driver-side records (manifest, run and
+    per-batch metrics) on any Hadoop FS, so they land on the filesystem
+    the sinks resolve to. Tmp + rename: atomic on HDFS/local; on S3 it's
+    copy+delete — still safe here because a torn record only forces a
+    re-run."""
     fs, jpath, jvm = _hadoop_fs(spark, path)
     tmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp")
     out = fs.create(tmp, True)
@@ -91,7 +93,7 @@ class Manifest:
 
     def save(self) -> None:
         if "://" in self.path:
-            _hadoop_write_text(
+            write_text(
                 self.spark, self.path,
                 json.dumps(self.data, indent=1, sort_keys=True),
             )

@@ -177,16 +177,3 @@ def gen_transcripts(spark, n_turns=20_000, n_convs=2_000, hot_frac=0.30, seed=42
     if partitions:
         df = df.repartition(partitions)
     return df
-
-
-def tool_dict_df(spark):
-    """Broadcast-side dictionary (dictmap DictFilePath shape)."""
-    return spark.createDataFrame(
-        [(k, v) for k, v in TOOL_DICT.items()], ["tool", "tool_category"]
-    )
-
-
-def role_dict_df(spark):
-    return spark.createDataFrame(
-        [(k, v) for k, v in ROLE_DICT.items()], ["role", "route_class"]
-    )

@@ -222,15 +222,6 @@ def _materialized(spark, sf_dir, name, build):
     return spark.read.parquet(path)
 
 
-def prebuild_fixtures(spark, sf_dir):
-    """Build every cached input fixture for ``sf_dir`` up front (input
-    preparation, not query work — bench reports it separately)."""
-    transcripts_from_events(spark, sf_dir).count()
-    for name, synth in _PAYLOAD_FIXTURES.items():
-        _materialized(spark, sf_dir, name, synth).count()
-    _warc_fixture_dir(spark, sf_dir)
-
-
 def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -4570,16 +4561,6 @@ def _otelops_source():
 
 _synth_otel_route_rows._cache_key_extra = _otelops_source()
 
-_PAYLOAD_FIXTURES = {
-    "prom_lines": _synth_prom_lines,
-    "otlp_trace_lines": _synth_otlp_trace_lines,
-    "otlp_metric_lines": _synth_otlp_metric_lines,
-    "otlp_log_lines": _synth_otlp_log_lines,
-    "influx_lines": _synth_influx_lines,
-    "otel_route_rows": _synth_otel_route_rows,
-    "lumberjack_blobs": _synth_lumberjack_blobs,
-}
-
 
 def _prom_lines(spark, sf_dir):
     return _materialized(spark, sf_dir, "prom_lines", _synth_prom_lines)
@@ -5760,9 +5741,6 @@ def _synth_redis_info(spark, sf_dir):
     ).otherwise(
         F.concat(F.lit("redis-"), s(uid), F.lit(":"), s(uid % 3 + 6379)))
     return agg.select(url.alias("url"), info.alias("content"))
-
-
-_PAYLOAD_FIXTURES["redis_info_bodies"] = _synth_redis_info
 
 
 def q_redis_info(spark, sf_dir):

@@ -54,13 +54,6 @@ class MetricsCollector:
     def to_rows(self) -> list[dict]:
         return [vars(r) for r in self.records]
 
-    def to_df(self, spark) -> DataFrame:
-        return spark.createDataFrame(
-            [(r.stage, r.in_rows, r.out_rows, r.dropped_rows, float(r.wall_ms))
-             for r in self.records],
-            "stage string, in_rows long, out_rows long, dropped_rows long, wall_ms double",
-        )
-
 
 def partition_lineage(df: DataFrame,
                       order_keys: tuple[str, str] = ("conv_id", "turn_idx")) -> DataFrame:

@@ -5,7 +5,8 @@ The reference groups events into batches per source and flushes a batch
 when, AFTER adding an event, the batch holds >= MinCnt events OR >=
 MinSizeBytes bytes (EventFlushStrategy::NeedFlushByCnt/BySize;
 timeouts are wall-clock send-path pressure — in this engine that is the
-streaming trigger / maxRecordsPerFile knob, as SURVEY §2.6 maps it).
+streaming trigger / ``flusher_table``'s MaxRecordsPerFile (flushers.py),
+as SURVEY §2.6 maps it).
 What was previously only "≈ covered by the writer knobs" is modeled
 exactly here: ``batcher_assign`` reproduces the greedy segmentation —
 walk the group's events in order, accumulate count and bytes, close the

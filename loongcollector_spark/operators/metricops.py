@@ -288,8 +288,8 @@ def aggregator_base(cfg: dict):
     ``__topic__`` column. Chunk semantics match the pb encoders'
     ``_chunked``: chunk k holds the group's logs
     [k*MaxLogCount, (k+1)*MaxLogCount) in order. MaxLogGroupCount is a
-    flush-pressure trigger — in this engine that's the batcher's
-    maxRecordsPerFile / trigger knob (plans/pipeline.py), so the key is
+    flush-pressure trigger — in this engine that's the streaming trigger
+    or ``flusher_table``'s MaxRecordsPerFile (flushers.py), so the key is
     accepted but has no per-row effect.
 
     Scale note: the rank needs one window shuffle over (group, order).

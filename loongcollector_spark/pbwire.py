@@ -742,21 +742,6 @@ def pb_double_bits(col):
     return bind_once(col.cast("double"), body)
 
 
-def _pb_fixed64(bits_col):
-    """8 little-endian bytes of a long expression: hex once (two's
-    complement, so negatives come out width-16 already), reverse the
-    byte pairs, unhex once — ~3× fewer interpreted nodes than a
-    per-byte shift/mask/unhex walk."""
-    from loongcollector_spark.operators.common import bind_once
-
-    return bind_once(
-        F.lpad(F.hex(bits_col), 16, "0"),
-        lambda h: F.unhex(
-            F.concat(*[F.substring(h, 15 - 2 * i, 2) for i in range(8)])
-        ),
-    )
-
-
 def _varint_of(v, max_bytes: int = 5):
     """Varint of a CHEAP-to-duplicate expression (an attribute reference
     from a prior projection).  Unlike ``_pb_varint`` there is NO

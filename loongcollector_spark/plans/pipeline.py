@@ -28,8 +28,8 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from loongcollector_spark import routing
-from loongcollector_spark.aggregate import melt_sink_counters, with_pack_id, windowed_counts
-from loongcollector_spark.checkpoint import Manifest, input_fingerprint
+from loongcollector_spark.aggregate import melt_sink_counters, with_pack_id
+from loongcollector_spark.checkpoint import Manifest, input_fingerprint, write_text
 from loongcollector_spark.datagen import ROLE_DICT, TOOL_DICT
 from loongcollector_spark.metrics import MetricsCollector, partition_lineage
 from loongcollector_spark.operators import build_operator
@@ -47,7 +47,6 @@ NGINX_KEYS = [
     "ip", "ident", "auth", "time_local", "method", "request", "http_version",
     "response_code", "bytes", "referrer", "user_agent",
 ]
-JSON_SCHEMA = "action string, lat_ms bigint, ok boolean, meta struct<model:string, tok:bigint>"
 GROK_PATTERN = "%{IP:client} %{WORD:method} %{URIPATHPARAM:request} %{NUMBER:bytes:int} %{NUMBER:duration:float}"
 
 DEFAULT_SINK_RULES = [
@@ -221,29 +220,14 @@ def transcript_pipeline(df: DataFrame, rules: list[SinkRule] | None = None) -> D
 
 
 def _write_metrics(spark: SparkSession, mc: MetricsCollector, out_dir: str) -> None:
-    """Persist the stage-metrics records as ``_metrics`` (JSON lines,
-    spark.read.json-compatible). The records are driver-resident (a
-    handful of rows), so for local paths this is a plain file write —
-    a createDataFrame+coalesce(1) Spark job here costs a full
-    job-submission round trip per pipeline run, pure fixed overhead that
-    eats into strong-scaling efficiency. Non-local filesystems fall back
-    to the (tiny) Spark write."""
+    """Persist the stage-metrics records as ``_metrics/part-00000.json``
+    (JSON lines, spark.read.json-compatible). The records are a handful
+    of driver-resident rows, so they go through the Hadoop-FS text writer
+    instead of a per-run Spark job."""
     import json as _json
-    import os as _os
-    import shutil as _shutil
 
-    if "://" in out_dir and not out_dir.startswith("file:"):
-        (mc.to_df(spark).coalesce(1).write.mode("overwrite")
-         .json(f"{out_dir}/_metrics"))
-        return
-    root = out_dir[len("file:"):] if out_dir.startswith("file:") else out_dir
-    mdir = _os.path.join(root, "_metrics")
-    _shutil.rmtree(mdir, ignore_errors=True)
-    _os.makedirs(mdir, exist_ok=True)
-    with open(_os.path.join(mdir, "part-00000.json"), "w") as f:
-        for rec in mc.to_rows():
-            f.write(_json.dumps(rec) + "\n")
-    open(_os.path.join(mdir, "_SUCCESS"), "w").close()
+    write_text(spark, f"{out_dir}/_metrics/part-00000.json",
+               "".join(_json.dumps(rec) + "\n" for rec in mc.to_rows()))
 
 
 def run_pipeline(
@@ -257,7 +241,6 @@ def run_pipeline(
     num_partitions: int | None = None,
     resume: bool = True,
     fail_after_stage: int | None = None,
-    max_records_per_file: int | None = None,
 ) -> dict:
     """Execute the pipeline with sinks, counters, lineage, metrics and a
     checkpoint manifest. Returns a summary dict.
@@ -360,12 +343,7 @@ def run_pipeline(
             frame = sink_frames[rule.name].observe(
                 obs, F.count(F.lit(1)).alias("n")
             )
-            w = frame.write.mode("overwrite")
-            if max_records_per_file:
-                # Batcher MaxLogCount flush analog (Batcher.h:131-140):
-                # bound output file sizes regardless of partition size
-                w = w.option("maxRecordsPerFile", max_records_per_file)
-            w.parquet(path)
+            frame.write.mode("overwrite").parquet(path)
             n = int(obs.get["n"])
             return rule, path, n, (time.monotonic() - t1) * 1e3
 

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from loongcollector_spark import routing
+from loongcollector_spark.checkpoint import write_text
 from loongcollector_spark.plans.pipeline import DEFAULT_SINK_RULES, transcript_pipeline
 from loongcollector_spark.routing import SinkRule
 
@@ -61,10 +62,13 @@ def run_streaming_pipeline(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         import json as _json
-        import os as _os
 
-        routed = transcript_pipeline(batch_df, rules).withColumn(
-            "_batch_id", F.lit(batch_id)
+        # in-file (conv_id, turn_idx) order, as the batch path keeps it;
+        # the sink filters below are narrow, so each file inherits it
+        routed = (
+            transcript_pipeline(batch_df, rules)
+            .withColumn("_batch_id", F.lit(batch_id))
+            .sortWithinPartitions("conv_id", "turn_idx")
         )
         routed = routed.persist()
         try:
@@ -82,33 +86,12 @@ def run_streaming_pipeline(
 
             with ThreadPoolExecutor(len(rules)) as ex:
                 stages = list(ex.map(write_sink, rules))
-            # batch metrics are a handful of driver-resident records —
-            # write them as one JSONL file through the Hadoop FileSystem
-            # API so they land on the SAME filesystem the sinks resolve
-            # to (a bare path on an HDFS-default cluster must go to
-            # HDFS, not the driver's local disk), without paying a
-            # per-batch Spark job
-            recs = [(batch_id, stage) for stage in stages]
-            payload = "".join(
-                _json.dumps({"batch_id": bid, "stage": stage}) + "\n"
-                for bid, stage in recs)
-            try:
-                spark_s = batch_df.sparkSession
-                jvm = spark_s._jvm
-                hconf = spark_s._jsc.hadoopConfiguration()
-                jpath = jvm.org.apache.hadoop.fs.Path(
-                    f"{out_dir}/_stream_metrics/batch-{batch_id}.json")
-                fs = jpath.getFileSystem(hconf)
-                stream = fs.create(jpath, True)
-                try:
-                    stream.write(bytearray(payload.encode()))
-                finally:
-                    stream.close()
-            except Exception:
-                # JVM gateway unavailable (e.g. Connect) → tiny Spark job
-                batch_df.sparkSession.createDataFrame(
-                    recs, "batch_id long, stage string"
-                ).write.mode("append").json(f"{out_dir}/_stream_metrics")
+            write_text(
+                batch_df.sparkSession,
+                f"{out_dir}/_stream_metrics/batch-{batch_id}.json",
+                "".join(_json.dumps({"batch_id": batch_id, "stage": stage})
+                        + "\n" for stage in stages),
+            )
         finally:
             routed.unpersist()
 
@@ -435,29 +418,6 @@ def media_admission_batch(out_dir: str, max_hamming: int = 3,
             sig.unpersist()
 
     return process
-
-
-def streaming_media_admission(
-    stream_df: DataFrame,
-    out_dir: str,
-    max_hamming: int = 3,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    available_now: bool = True,
-):
-    """Streaming near-dup admission for media payloads — continuous
-    ingest of images against the accumulated fingerprint index, with
-    the same exactly-once idempotent-subdir story as
-    ``streaming_minhash_admission``."""
-    process = media_admission_batch(out_dir, max_hamming, id_col,
-                                    payload_col)
-    writer = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{out_dir}/_media_adm_checkpoint")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def multiline_merge_stream(

@@ -3,8 +3,10 @@ row sets as the batch pipeline over the same input, and incremental files
 arriving later must be picked up from the checkpoint (resume semantics)."""
 
 import datetime
+import os
 import shutil
 import tempfile
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,8 +24,30 @@ def stream_dirs(spark):
     src = tempfile.mkdtemp(prefix="lcs_stream_src_")
     out = tempfile.mkdtemp(prefix="lcs_stream_out_")
     yield src, out
+    active = spark.streams.active
+    for q in active:
+        q.stop()
     shutil.rmtree(src, ignore_errors=True)
     shutil.rmtree(out, ignore_errors=True)
+    assert not active, f"streaming queries left running: {active}"
+
+
+def _stop_when(q, done, timeout_s=60):
+    """Poll ``q.recentProgress`` until ``done(progress)`` holds, then stop
+    ``q``. A ProcessingTimeTimeout state query always asks for another
+    (no-data) batch, so it never ends by itself: ``awaitTermination``
+    only times out and ``processAllAvailable`` never returns."""
+    deadline = time.monotonic() + timeout_s
+    try:
+        while not done(q.recentProgress):
+            assert time.monotonic() < deadline, "no progress before deadline"
+            time.sleep(0.1)
+    finally:
+        q.stop()
+
+
+def _rows_read(n):
+    return lambda progress: sum(p["numInputRows"] for p in progress) >= n
 
 
 def _gen(spark, n, conv_prefix=""):
@@ -59,6 +83,41 @@ def test_stream_matches_batch(spark, stream_dirs):
         }
         got = _sink_set(spark, f"{out}/sinks/{rule.name}")
         assert got == want, f"sink {rule.name}: stream != batch"
+
+    # one {batch_id, stage} record per sink per committed batch
+    commits = sorted(int(f) for f in os.listdir(f"{out}/_checkpoint/commits")
+                     if f.isdigit())
+    assert commits
+    recs = spark.read.json(f"{out}/_stream_metrics")
+    assert sorted(recs.columns) == ["batch_id", "stage"]
+    assert sorted((r["batch_id"], r["stage"]) for r in recs.collect()) == sorted(
+        (b, f"sink:{rule.name}") for b in commits for rule in DEFAULT_SINK_RULES)
+
+
+def test_stream_sink_files_keep_conv_turn_order(spark, stream_dirs):
+    """Every stream sink file is non-decreasing in (conv_id, turn_idx),
+    the in-file order the batch path keeps."""
+    src, out = stream_dirs
+    # gen_transcripts repartitions, so each input file is out of order
+    _gen(spark, 600).write.mode("overwrite").parquet(src)
+    q = run_streaming_pipeline(
+        transcripts_stream(spark, src, max_files_per_trigger=1), out)
+    q.awaitTermination(120)
+
+    for rule in DEFAULT_SINK_RULES:
+        files: dict[str, list] = {}
+        rows = (
+            spark.read.parquet(f"{out}/sinks/{rule.name}")
+            .select(F.input_file_name().alias("file"),
+                    F.monotonically_increasing_id().alias("pos"),
+                    "conv_id", "turn_idx")
+            .collect()
+        )
+        for r in sorted(rows, key=lambda r: (r["file"], r["pos"])):
+            files.setdefault(r["file"], []).append((r["conv_id"], r["turn_idx"]))
+        assert files, f"sink {rule.name} is empty"
+        for f, keys in files.items():
+            assert keys == sorted(keys), f"sink {rule.name}: {f} out of order"
 
 
 def test_stream_resume_picks_up_new_files(spark, stream_dirs):
@@ -169,15 +228,13 @@ def test_multiline_merge_stream_spans_batches(spark, stream_dirs):
         .option("checkpointLocation", f"{out}/_ml_checkpoint")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    _stop_when(q, _rows_read(4))  # both input files consumed
     got = {r["turn_idx"]: (r["text"], r["n_merged"])
            for r in spark.read.parquet(f"{out}/merged").collect()}
     # the spanning event closed when 'ERROR next' arrived in batch 2
     assert got[0] == ("ERROR boom\n  at frame1\n  at frame2", 3)
     # the open tail ('ERROR next') flushes once the timeout fires — run
     # one more (empty) availableNow pass after the 1 ms timeout elapsed
-    import time
-
     time.sleep(0.2)
     q2 = (
         multiline_merge_stream(
@@ -189,7 +246,7 @@ def test_multiline_merge_stream_spans_batches(spark, stream_dirs):
         .option("checkpointLocation", f"{out}/_ml_checkpoint")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q2.awaitTermination(120)
+    _stop_when(q2, bool)  # until a post-restart batch has committed
     got = {r["turn_idx"]: (r["text"], r["n_merged"])
            for r in spark.read.parquet(f"{out}/merged").collect()}
     assert got.get(3) == ("ERROR next", 1)
@@ -224,7 +281,7 @@ def test_multiline_merge_stream_out_of_order_batches(spark, stream_dirs):
         .option("checkpointLocation", f"{out}/_ml_checkpoint")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    _stop_when(q, _rows_read(4))  # both input files consumed
     got = {r["turn_idx"]: (r["text"], r["n_merged"])
            for r in spark.read.parquet(f"{out}/merged").collect()}
     assert got[0] == ("ERROR boom\n  at frame1\n  at frame2", 3)
@@ -332,9 +389,6 @@ def test_streaming_minhash_admission_across_batches(spark, stream_dirs):
     batch-1 docs come back dup_snapshot (probed against the PERSISTED
     band index, batch 1 never re-read), genuinely new docs are admitted
     and their bands extend the index."""
-    import os
-    import time
-
     from loongcollector_spark.streaming import streaming_minhash_admission
 
     src, out = stream_dirs
